@@ -102,8 +102,17 @@ object Cdc {
     * empty short-circuit, cdc_operator.py:237-242).
     */
   def advance(batch: DataFrame, schema: String, table: String,
-      tsCol: String, versionCol: Option[String], prev: Option[Watermark]): Watermark = {
-    val aggs = Seq(max(col(tsCol)).as("ts")) ++ versionCol.map(c => max(col(c)).as("scn"))
+      tsCol: String, versionCol: Option[String], prev: Option[Watermark]): Watermark =
+    summarize(batch, schema, table, tsCol, versionCol, prev)._2
+
+  /** One aggregate over `batch` — `count(*)`, `max(tsCol)` and
+    * `max(versionCol)` — read into (row count, next watermark); a column's
+    * max falls back to `prev` when the batch is empty.
+    */
+  private def summarize(batch: DataFrame, schema: String, table: String,
+      tsCol: String, versionCol: Option[String], prev: Option[Watermark]): (Long, Watermark) = {
+    val aggs = Seq(count(lit(1)).as("n"), max(col(tsCol)).as("ts")) ++
+      versionCol.map(c => max(col(c)).as("scn"))
     val row = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
     // TimestampType surfaces as java.sql.Timestamp, TimestampNTZ as LocalDateTime
     val newTs = Option(row.getAs[Any]("ts")).map {
@@ -112,15 +121,18 @@ object Cdc {
       case other => sys.error(s"unsupported watermark column type: ${other.getClass}")
     }
     val newScn = versionCol.flatMap(_ => Option(row.getAs[Any]("scn")).map(_.toString.toLong))
-    Watermark(schema, table,
+    (row.getLong(0), Watermark(schema, table,
       newTs.orElse(prev.map(_.lastTimestampMs)).getOrElse(0L),
-      newScn.orElse(prev.map(_.lastScn)).getOrElse(0L))
+      newScn.orElse(prev.map(_.lastScn)).getOrElse(0L)))
   }
 
   /** One micro-batch CDC cycle (the reference's whole
     * `OracleToIcebergCDCOperator.execute`, cdc_operator.py:223-297, as a
     * function): read watermark → incremental filter → empty short-circuit →
-    * sink → advance watermark. `sink` receives only the changed rows.
+    * sink → advance watermark. `sink` receives only the changed rows. One
+    * aggregate gives both the emptiness test and the next watermark, which
+    * is stored only after the sink returns — a sink that throws leaves the
+    * stored watermark where it was, so the batch is re-extracted.
     */
   def runCycle(
       store: WatermarkStore,
@@ -135,11 +147,11 @@ object Cdc {
       case Some(vc) => scnIncrement(batch0, vc, prev)
       case None     => timestampIncrement(batch0, tsCol, prev)
     }
-    // cache: the batch feeds both the sink and the watermark aggregate
+    // cache: the batch feeds both the watermark aggregate and the sink
     batch.cache()
     try {
-      if (!batch.isEmpty) sink(batch)
-      val next = advance(batch, schema, table, tsCol, versionCol, prev)
+      val (rows, next) = summarize(batch, schema, table, tsCol, versionCol, prev)
+      if (rows > 0) sink(batch)
       store.put(next)
       next
     } finally batch.unpersist()

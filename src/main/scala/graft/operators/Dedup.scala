@@ -226,7 +226,7 @@ object Dedup {
                 .select(col("__id").as("__bid"), col(idCol).as("__cid"))
                 .distinct().persist(lvl)
               try {
-                // no explicit materialize needed: readForKeys' bounds probe
+                // no explicit materialize needed: readForKeys' key digest
                 // collects from `cands`' lineage, populating the persist
                 val slice = corpus.readForKeysAt(spark,
                   cands.select(col("__cid").as(idCol)).distinct(), snap)
@@ -1377,7 +1377,7 @@ object Dedup {
                 .select(col("__id").as("__bid"), col(idCol).as("__cid"))
                 .distinct().persist(lvl)
               try {
-                // no explicit materialize needed: readForKeys' bounds probe
+                // no explicit materialize needed: readForKeys' key digest
                 // collects from `cands`' lineage, populating the persist
                 val slice = corpus.readForKeysAt(spark,
                   cands.select(col("__cid").as(idCol)).distinct(), snap)

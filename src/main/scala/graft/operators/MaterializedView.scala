@@ -59,7 +59,7 @@ import graft.table.Icebox
 object MaterializedView {
 
   /** Below this pinned-snapshot size the refreshers read a join side
-    * outright instead of key-pruning it: the pruning bounds probe is a
+    * outright instead of key-pruning it: the pruning key digest is a
     * Spark job over the (possibly joined) key plan, and skipping IO on a
     * table this small cannot repay it. Matches the order of Spark's
     * broadcast threshold — a side this size broadcasts anyway.
@@ -538,7 +538,7 @@ object MaterializedView {
             if (m == j) atJ(acc)
             else {
               val snap = if (j < 0) dSnaps(m) else dimSnapInTerm(m, j)
-              // SMALL-DIM FAST PATH: the keyDisjoint bounds probe is a
+              // SMALL-DIM FAST PATH: the readForKeys key digest is a
               // Spark job executing the (cached) prune-source plan; when
               // the dim's whole snapshot is a few MB, skipping IO on it
               // saves nothing — read it outright, the join filters. At
@@ -581,8 +581,8 @@ object MaterializedView {
         val changedTerms = dims.zipWithIndex.flatMap { case (dj, j) =>
           dDiffsC(j).map(dDiff => (dj, j, dDiff)) }
         // each term's construction runs its OWN serialized prune-probe
-        // collect jobs (keyDisjoint bounds + bloom hashes over the cached
-        // diffs); the terms only READ pinned snapshots and are mutually
+        // collect job (the readForKeys key digest over the cached diffs);
+        // the terms only READ pinned snapshots and are mutually
         // independent, so build them from a small thread pool — the probe
         // jobs overlap instead of queueing (optimization guide §2.6). Reads
         // are thread-safe (concurrent metadata caches); the only shared

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
-import graft.table.{Icebox, Snapshot}
+import scala.jdk.CollectionConverters._
+import graft.table.{Icebox, KeyDigest, Snapshot}
 
 /** SQL-text `MERGE INTO` over Icebox tables (SURVEY §4 nice-to-have).
   *
@@ -14,10 +15,23 @@ import graft.table.{Icebox, Snapshot}
   * accepted syntax — multiple conditional WHEN clauses, `UPDATE SET *`,
   * `INSERT *`, `WHEN NOT MATCHED BY SOURCE` — is exactly Spark's, and the
   * parsed catalyst expressions are executed verbatim (re-rendered via
-  * `Expression.sql` onto aliased DataFrames). Execution is copy-on-write
-  * against the Icebox snapshot log: one join pass computes the merged row
-  * set, one atomic `overwrite` commit publishes it (readers only ever see
-  * the pre- or post-merge snapshot).
+  * `Expression.sql` onto aliased DataFrames). Every merge publishes ONE
+  * atomic snapshot (readers only ever see the pre- or post-merge state), in
+  * one of two executions, chosen by the table's `write.merge.mode`:
+  *
+  *  - copy-on-write (the default, and the fallback for any ON clause that
+  *    is not a pure target=source equality conjunction or any WHEN NOT
+  *    MATCHED BY SOURCE clause): one join pass computes the merged row set
+  *    of the WHOLE table, one `overwrite` commit publishes it;
+  *  - merge-on-read: the source's key tuples are digested once on the
+  *    driver ([[graft.table.KeyDigest]]: distinct tuples, their counts and
+  *    hashes, one Spark action). The digest prunes the target read to files
+  *    that might hold a key and filters its rows to the exact keys, answers
+  *    the cardinality check, and becomes the equality-delete file; one
+  *    `src LEFT OUTER JOIN tgt` pass yields the matched rows' new images
+  *    and the inserts, committed with that delete file (a merge with no
+  *    WHEN MATCHED clause is a plain append of the inserts). Cost is
+  *    O(batch), not O(table).
   *
   * Why not a DSv2 `SupportsRowLevelOperations` catalog: Spark's analyzer
   * rewrite for v2 MERGE requires the table to supply a full DataSourceV2
@@ -32,13 +46,14 @@ import graft.table.{Icebox, Snapshot}
   * row matched by MORE THAN ONE source row errors when any matched action
   * exists (non-deterministic merge), matching Delta's cardinality check.
   *
-  * Scale: the merge is one shuffle join (target × source on the ON
-  * condition) plus broadcast-size action predicates; the cardinality check
-  * is a count over the joined keys, piggybacking the same shuffle shape. At
-  * 100 TB the dominant cost is the copy-on-write rewrite itself — the same
-  * cost profile as `Upsert.intoTable`, which callers with partition-scoped
-  * sources should prefer (`intoTablePartitions` rewrites only touched
-  * partitions).
+  * Scale: a copy-on-write merge is one shuffle join (target × source on
+  * the ON condition) plus broadcast-size action predicates; at 100 TB its
+  * dominant cost is the rewrite itself — the same cost profile as
+  * `Upsert.intoTable`, which callers with partition-scoped sources should
+  * prefer (`intoTablePartitions` rewrites only touched partitions). A
+  * merge-on-read merge touches the batch's keys only: the cardinality
+  * check reads duplicate keys from the digest and semi-probes the target
+  * only when there are some.
   *
   * Source references: a table/temp-view name (optionally aliased), or an
   * inline `USING (SELECT ...)` subquery — the subquery is re-run from its
@@ -80,47 +95,58 @@ object MergeSql {
     validateAssignmentKeys(m, targetCols)
 
     // pure target=source equality conjunction, when the ON shape admits one
-    // (drives both the cheap cardinality check and the merge-on-read path)
+    // (drives both the cheap cardinality check and the merge-on-read path).
+    // An ON clause repeating a target column (t.k = s.a AND t.k = s.b) is a
+    // valid statement but names no key tuple, so it takes the generic path
     val equiPairs = equiKeys(m.mergeCondition, targetAlias, sourceAlias)
+      .filter(p => p.map(_._1).distinct.size == p.size)
 
-    // MERGE-ON-READ TARGET PRUNING: when the merge will commit without a
-    // whole-table rewrite (equi ON, merge-on-read mode, no BY SOURCE
-    // clause), a file PROVEN to hold none of the source's keys contributes
-    // no matched row, no anti-join hit, and no cardinality group — so the
-    // target scan reads only files that might hold source keys (stats +
-    // manifest-bloom pruned). A point-MERGE into a huge clustered or
-    // bloom-indexed table scans O(holding files), not O(table). The
-    // copy-on-write path MUST see the full table (it overwrites), so any
-    // fallback condition disables pruning.
-    val morPrunable = props(icebox) == "merge-on-read" &&
-      m.notMatchedBySourceActions.isEmpty && equiPairs.isDefined &&
-      (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty)
-    val tgt = (if (!morPrunable) icebox.read(spark) else {
-      val keyDf = srcDf.select(equiPairs.get.map { case (tc, sc) => col(sc).as(tc) }: _*)
-        .dropDuplicates()
-      icebox.readForKeys(spark, keyDf)
-    }).alias(targetAlias)
+    // MERGE-ON-READ (`write.merge.mode = merge-on-read`, equi ON, no BY
+    // SOURCE clause): the merge commits without a whole-table rewrite, so
+    // only target rows holding a source key take part. ONE key digest of
+    // the source (KeyDigest: distinct key tuples, their counts and hashes,
+    // one Spark action) drives every key-dependent step: the target read
+    // prunes files by manifest stats and blooms and filters rows by the
+    // exact keys, the cardinality check reads duplicate keys from it, and
+    // the equality-delete commit writes it. A point-MERGE into a huge
+    // table reads O(holding files) and applies deletes to O(batch) rows.
+    // The copy-on-write path MUST see the full table (it overwrites), so
+    // any fallback condition disables all of this.
+    val digest: Option[KeyDigest] =
+      if (props(icebox) == "merge-on-read" && m.notMatchedBySourceActions.isEmpty &&
+          equiPairs.isDefined && (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty))
+        Some(icebox.keyDigest(
+          srcDf.select(equiPairs.get.map { case (tc, sc) => col(sc).as(tc) }: _*)))
+      else None
+    val tgt = digest
+      .fold(icebox.read(spark))(icebox.readForKeysAt(spark, _, icebox.currentSnapshot))
+      .alias(targetAlias)
 
-    val matched = tgt.join(src, cond, "inner")
-    // the fast path renames source keys to target-side names; an ON clause
-    // repeating a target column (t.k = s.a AND t.k = s.b) would make that
-    // frame ambiguous — valid statement, so fall through to the generic check
-    if (m.matchedActions.nonEmpty) equiPairs.filter(p => p.map(_._1).distinct.size == p.size) match {
+    lazy val matched = tgt.join(src, cond, "inner")
+    if (m.matchedActions.nonEmpty) equiPairs match {
       case Some(pairs) =>
         // EQUI fast path: a target row matches >1 source row iff some
-        // source key tuple repeats AND exists in the target — one
-        // aggregation over the (small) SOURCE, and only on repeated keys a
-        // semi-probe of the target. The generic check below aggregates the
-        // FULL target twice; at 100 TB that is the difference between a
-        // broadcast-sized check and two table-wide shuffles.
-        val keyCols = pairs.map { case (_, sc) => col(s"$sourceAlias.$sc") }
-        val dupKeys = src.groupBy(keyCols: _*).agg(count(lit(1)).as("__m"))
-          .filter(col("__m") > 1).drop("__m")
-          .toDF(pairs.map(_._1): _*) // rename to target-side names
-          .na.drop("any") // NULL keys never join-match, so they can't double-match
-        if (!dupKeys.isEmpty) {
-          val hit = tgt.join(broadcast(dupKeys),
-            pairs.map { case (tc, _) => col(s"$targetAlias.$tc") === dupKeys(tc) }
+        // source key tuple repeats AND exists in the target — the repeated
+        // non-null tuples come from the merge-on-read digest, or else from
+        // one aggregation over the (small) SOURCE, and only when there are
+        // some is the target semi-probed. The generic check below
+        // aggregates the FULL target twice; at 100 TB that is the
+        // difference between a broadcast-sized check and two table-wide
+        // shuffles.
+        val dupKeys: Option[DataFrame] = digest.flatMap(_.duplicates) match {
+          case Some(rows) =>
+            Option.when(rows.nonEmpty)(spark.createDataFrame(rows.asJava, digest.get.schema))
+          case None =>
+            val keyCols = pairs.map { case (_, sc) => col(s"$sourceAlias.$sc") }
+            val agg = src.groupBy(keyCols: _*).agg(count(lit(1)).as("__m"))
+              .filter(col("__m") > 1).drop("__m")
+              .toDF(pairs.map(_._1): _*) // rename to target-side names
+              .na.drop("any") // NULL keys never join-match, so they can't double-match
+            Option.when(!agg.isEmpty)(agg)
+        }
+        dupKeys.foreach { dk =>
+          val hit = tgt.join(broadcast(dk),
+            pairs.map { case (tc, _) => col(s"$targetAlias.$tc") === dk(tc) }
               .reduce(_ && _), "left_semi").limit(1).count()
           require(hit == 0L,
             "MERGE cardinality violation: a target row matches more than one source row")
@@ -154,77 +180,73 @@ object MergeSql {
       kept.select(outCols: _*)
     }
 
-    lazy val mergedMatched =
-      if (m.matchedActions.isEmpty)
-        // left_semi, NOT the inner join: with no matched action each matched
-        // target row passes through exactly once, however many source rows
-        // hit it (the inner join would emit one copy per source match)
-        tgt.join(src, cond, "left_semi").select(targetCols.map(c => col(s"$targetAlias.$c")): _*)
-      else applyActions(matched, m.matchedActions)
-
-    // the whole-table side — only the copy-on-write path pays for it
-    lazy val mergedUnmatched = {
-      val unmatchedTarget = tgt.join(src, cond, "left_anti")
-      if (m.notMatchedBySourceActions.isEmpty)
-        unmatchedTarget.select(targetCols.map(c => col(s"$targetAlias.$c")): _*)
-      else applyActions(unmatchedTarget, m.notMatchedBySourceActions)
-    }
-
-    val inserts: Option[DataFrame] =
-      if (m.notMatchedActions.isEmpty) None
-      else {
-        val unmatchedSource = src.join(tgt, cond, "left_anti")
-          .withColumn("__act", actionIndex(m.notMatchedActions))
-          .filter(col("__act") > 0)
-        val outCols = targetCols.map { c =>
-          val typedNull = lit(null).cast(targetSchema(c).dataType)
-          val perAction = m.notMatchedActions.zipWithIndex.foldLeft(typedNull) {
-            case (acc, (ins: InsertAction, i)) =>
-              when(col("__act") === (i + 1), assignedValue(ins.assignments, c)
-                .getOrElse(typedNull)).otherwise(acc)
-            case (acc, (_: InsertStarAction, i)) =>
-              when(col("__act") === (i + 1), col(s"$sourceAlias.$c")).otherwise(acc)
-            case (acc, _) => acc
-          }
-          perAction.as(c)
+    // the rows the NOT MATCHED clauses insert, from unmatched source rows
+    def insertsFrom(unmatchedSource: DataFrame): DataFrame = {
+      val withIdx = unmatchedSource
+        .withColumn("__act", actionIndex(m.notMatchedActions))
+        .filter(col("__act") > 0)
+      val outCols = targetCols.map { c =>
+        val typedNull = lit(null).cast(targetSchema(c).dataType)
+        val perAction = m.notMatchedActions.zipWithIndex.foldLeft(typedNull) {
+          case (acc, (ins: InsertAction, i)) =>
+            when(col("__act") === (i + 1), assignedValue(ins.assignments, c)
+              .getOrElse(typedNull)).otherwise(acc)
+          case (acc, (_: InsertStarAction, i)) =>
+            when(col("__act") === (i + 1), col(s"$sourceAlias.$c")).otherwise(acc)
+          case (acc, _) => acc
         }
-        Some(unmatchedSource.select(outCols: _*))
+        perAction.as(c)
       }
+      withIdx.select(outCols: _*)
+    }
+    lazy val inserts = insertsFrom(src.join(tgt, cond, "left_anti"))
 
-    // MERGE-ON-READ mode (`write.merge.mode = merge-on-read`): instead of
-    // rewriting the table copy-on-write, commit ONE equality-delete file
-    // (the source's key tuples — deleting an absent key is a no-op, so the
-    // distinct source keys stand in for "matched keys" without an extra
-    // join) plus the post-action images of matched rows and the inserts, in
-    // one atomic snapshot. Write cost is O(matched + inserted) regardless
-    // of table size — the reference's documented upsert contract
-    // (README.md:509-510) at CDC-batch cost. Falls back to copy-on-write
-    // when the ON condition is not a pure target=source equality
-    // conjunction (no key columns to delete by) or when WHEN NOT MATCHED BY
-    // SOURCE is present (that clause edits the unmatched-target side, which
-    // only a rewrite can express).
-    val mergeMode = props(icebox)
-    val morKeys: Option[DataFrame] =
-      if (mergeMode != "merge-on-read" || m.notMatchedBySourceActions.nonEmpty ||
-          m.matchedActions.isEmpty) None
-      else equiPairs.map { pairs =>
-        src.select(pairs.map { case (tc, sc) => col(s"$sourceAlias.$sc").as(tc) }: _*)
-          .dropDuplicates()
-      }
-    val insertOnlyMor = mergeMode == "merge-on-read" && m.matchedActions.isEmpty &&
-      m.notMatchedBySourceActions.isEmpty && inserts.isDefined
-    val snap = morKeys match {
-      case _ if insertOnlyMor =>
-        // no matched/by-source action → matched target rows stay in place;
-        // the merge degenerates to an append of the unmatched source rows
-        icebox.append(inserts.get, icebox.partitionColumns)
-      case Some(keys) =>
-        val newData = inserts.foldLeft(mergedMatched)(_ unionByName _)
-        icebox.commitEqualityDeletes("merge-mor", keys, Some(newData),
-          icebox.partitionColumns)
+    val snap = digest match {
+      case Some(d) if m.matchedActions.nonEmpty =>
+        // MERGE-ON-READ commit: ONE equality-delete file (the source's key
+        // tuples — deleting an absent key is a no-op, so the distinct
+        // source keys stand in for "matched keys" without an extra join)
+        // plus the post-action images of matched rows and the inserts, in
+        // one atomic snapshot. Write cost is O(matched + inserted)
+        // regardless of table size — the reference's documented upsert
+        // contract (README.md:509-510) at CDC-batch cost.
+        //
+        // ONE target pass: src LEFT OUTER JOIN tgt feeds both the matched
+        // actions (target key non-null: an equi-match needs one) and the
+        // NOT MATCHED inserts (target key null). Both branches share the
+        // join's exchanges, so the target is read once, where an inner
+        // join plus a left_anti would read and shuffle it twice.
+        val joined = src.join(tgt, cond, "left_outer")
+        val isMatched = col(s"$targetAlias.${equiPairs.get.head._1}").isNotNull
+        val mergedMatched = applyActions(joined.filter(isMatched), m.matchedActions)
+        val merged =
+          if (m.notMatchedActions.isEmpty) mergedMatched
+          else mergedMatched.unionByName(insertsFrom(joined.filter(!isMatched)))
+        icebox.commitEqualityDeletes("merge-mor", d.keys, Some(merged),
+          icebox.partitionColumns, digest = digest)
+      case Some(_) =>
+        // no matched action → matched target rows stay in place; the merge
+        // degenerates to an append of the unmatched source rows
+        icebox.append(inserts, icebox.partitionColumns)
       case None =>
-        val result = inserts.foldLeft(mergedMatched.unionByName(mergedUnmatched))(_ unionByName _)
-        icebox.overwrite(result, icebox.partitionColumns)
+        // COPY-ON-WRITE: one join pass computes the merged row set, one
+        // atomic `overwrite` commit publishes it
+        val mergedMatched =
+          if (m.matchedActions.isEmpty)
+            // left_semi, NOT the inner join: with no matched action each
+            // matched target row passes through exactly once, however many
+            // source rows hit it (the inner join would emit one copy per
+            // source match)
+            tgt.join(src, cond, "left_semi").select(targetCols.map(c => col(s"$targetAlias.$c")): _*)
+          else applyActions(matched, m.matchedActions)
+        val unmatchedTarget = tgt.join(src, cond, "left_anti")
+        val mergedUnmatched =
+          if (m.notMatchedBySourceActions.isEmpty)
+            unmatchedTarget.select(targetCols.map(c => col(s"$targetAlias.$c")): _*)
+          else applyActions(unmatchedTarget, m.notMatchedBySourceActions)
+        val result = mergedMatched.unionByName(mergedUnmatched)
+        icebox.overwrite(if (m.notMatchedActions.isEmpty) result else result.unionByName(inserts),
+          icebox.partitionColumns)
     }
     // a registerView temp view is pinned to the pre-merge snapshot's file
     // set — repoint it so SELECT → MERGE → SELECT composes on one name

@@ -2311,26 +2311,54 @@ final class Icebox(val tableDir: String) {
     }
   }
 
-  /** Write `keys` — distinct key tuples whose column set IS the equality
-    * columns — as ONE equality-delete parquet dir under `deletes/` and
-    * return its path. Small by construction (one CDC batch's keys), so the
-    * read-side joins broadcast.
+  /** Write one equality-delete parquet dir under `deletes/` holding the
+    * digest's key tuples under PHYSICAL key names, and return its path.
+    * Under the digest's cap the file is written straight from the driver-
+    * held distinct tuples (no dedupe shuffle) and the dir's keys are put in
+    * [[Icebox.eqKeyCache]], so the first read after the commit needs no job
+    * to re-read it; above the cap the keys are deduplicated distributed.
+    * Small by construction (one CDC batch's keys), so the read-side joins
+    * broadcast.
     */
-  private def writeEqDeleteFile(keys: DataFrame): String = {
+  private def writeEqDeleteFile(digest: KeyDigest): String = {
     store.mkdirs(deletesDir)
     val dir = store.render(new HPath(deletesDir, s"eqdelete-${UUID.randomUUID().toString.take(12)}"))
-    keys.dropDuplicates().coalesce(1).write.mode("overwrite").parquet(dir)
+    val spark = digest.keys.sparkSession
+    val physSchema = StructType(digest.schema.fields.map(f => f.copy(name = toPhysical(f.name))))
+    digest.tuples match {
+      case Some(rows) =>
+        spark.createDataFrame(rows.asJava, physSchema).coalesce(1)
+          .write.mode("overwrite").parquet(dir)
+        // the schema a parquet read of the dir returns: every field nullable
+        Icebox.cacheEqDeleteKeys(dir,
+          StructType(physSchema.fields.map(_.copy(nullable = true))), rows)
+      case None =>
+        digest.keys.toDF(physSchema.fieldNames.toIndexedSeq: _*).dropDuplicates().coalesce(1)
+          .write.mode("overwrite").parquet(dir)
+    }
     dir
   }
 
+  /** The cap on a [[KeyDigest]]'s distinct tuples: `bloom.attach.max-keys`
+    * (default 100k).
+    */
+  private def bloomMaxKeys: Int =
+    properties.get("bloom.attach.max-keys").map(_.toInt).getOrElse(100000)
+
+  /** Digest `keys` (columns = LOGICAL key column names) under this table's
+    * cap — one Spark action; see [[KeyDigest]].
+    */
+  private[graft] def keyDigest(keys: DataFrame): KeyDigest = KeyDigest(keys, bloomMaxKeys)
+
   /** Build the "provably holds NONE of the batch's keys" predicate over
     * `files` — shared by the eq-delete attach pruning and [[readForKeys]].
-    * `keysPhys` columns are PHYSICAL key names.
+    * Runs no Spark action when the digest is under its cap; above it, the
+    * digest's one bounds aggregate.
     *
-    * Range check: one tiny agg computes the batch's per-column bounds.
-    * Numeric keys compare numerically; STRING keys compare in UTF8 binary
-    * order — the order Spark's string min/max, the parquet footer stats,
-    * and prunedFilesByStatsString all use — so string-keyed CDC (uuids,
+    * Range check, from the digest's bounds. Numeric keys compare
+    * numerically; STRING keys compare in UTF8 binary order — the order
+    * Spark's string min/max, the parquet footer stats, and
+    * prunedFilesByStatsString all use — so string-keyed CDC (uuids,
     * natural keys) gets the same pruning on a range-clustered table.
     *
     * Bloom check (the point-lookup complement, and the one that works on
@@ -2339,53 +2367,30 @@ final class Icebox(val tableDir: String) {
     * of the batch's key hashes might be in it — blooms have no false
     * negatives, so the skip is exact; false positives only keep extra
     * files (conservative). Bounded: the probe costs |files| x |distinct
-    * keys| driver-side bit tests, so it engages only when the batch's
-    * distinct keys fit `bloom.attach.max-keys` (default 100k;
-    * short-circuiting exits at the first possible hit, and CDC batches
+    * keys| driver-side bit tests, so it engages only under the digest's cap
+    * (short-circuiting exits at the first possible hit, and CDC batches
     * are typically far smaller). Missing/untyped stats and missing blooms
     * keep the file.
     */
-  private def keyDisjoint(files: Seq[DataFile], keysPhys: DataFrame): DataFile => Boolean = {
-    val keyCols = keysPhys.columns.toSeq
-    val numericKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType.isInstanceOf[NumericType])
-    val stringKeyCols = keyCols.filter(c => keysPhys.schema(c).dataType == StringType)
-    val boundedCols = numericKeyCols ++ stringKeyCols
-    val (bounds, strBounds) =
-      if (boundedCols.isEmpty) (Map.empty[String, (Double, Double)],
-        Map.empty[String, (String, String)])
-      else {
-        val aggs = numericKeyCols.flatMap(c =>
-          Seq(min(col(c)).cast("double"), max(col(c)).cast("double"))) ++
-          stringKeyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val r = keysPhys.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val num = numericKeyCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-          else Some(c -> (r.getDouble(2 * i), r.getDouble(2 * i + 1)))
-        }.toMap
-        val base = 2 * numericKeyCols.size
-        val str = stringKeyCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(base + 2 * i) || r.isNullAt(base + 2 * i + 1)) None
-          else Some(c -> (r.getString(base + 2 * i), r.getString(base + 2 * i + 1)))
-        }.toMap
-        (num, str)
-      }
+  private[graft] def keyDisjoint(files: Seq[DataFile], digest: KeyDigest): DataFile => Boolean = {
+    val phys = digest.columns.map(toPhysical)
+    val (numBounds, strBounds) = digest.bounds
+    val bounds = numBounds.map { case (i, b) => phys(i) -> b }
+    val strs = strBounds.map { case (i, b) => phys(i) -> b }
     def utf8Lt(a: String, b: String): Boolean =
       org.apache.spark.unsafe.types.UTF8String.fromString(a)
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
-    val bloomMaxKeys = properties.get("bloom.attach.max-keys").map(_.toInt).getOrElse(100000)
-    val bloomKeyCols = keyCols.filter(c => files.exists(_.blooms.contains(c)))
-    val keyHashes: Map[String, Array[Long]] = bloomKeyCols.flatMap { c =>
-      val hs = keysPhys.where(col(c).isNotNull)
-        .select(org.apache.spark.sql.functions.xxhash64(col(c)).as("h"))
-        .distinct().limit(bloomMaxKeys + 1).collect().map(_.getLong(0))
-      if (hs.length > bloomMaxKeys) None else Some(c -> hs)
-    }.toMap
+    val keyHashes: Map[String, Array[Long]] = digest.hashes.map { hs =>
+      phys.indices.collect {
+        case i if files.exists(_.blooms.contains(phys(i))) => phys(i) -> hs(i)
+      }.toMap
+    }.getOrElse(Map.empty)
     (f: DataFile) =>
       bounds.exists { case (c, (klo, khi)) =>
         f.stats.get(c).exists { case (mn, mx) =>
           scala.util.Try(mx.toDouble < klo || mn.toDouble > khi).getOrElse(false)
         }
-      } || strBounds.exists { case (c, (klo, khi)) =>
+      } || strs.exists { case (c, (klo, khi)) =>
         f.stats.get(c).exists { case (mn, mx) => utf8Lt(mx, klo) || utf8Lt(khi, mn) }
       } || keyHashes.exists { case (c, hs) =>
         f.blooms.get(c).flatMap(loadBloom).exists(bf => !hs.exists(bf.mightContainLong))
@@ -2401,6 +2406,11 @@ final class Icebox(val tableDir: String) {
     * O(table) — on a range-clustered table the stats prune, on an
     * unsorted bloom-indexed table the membership filters prune, and with
     * neither this degrades to a plain [[read]].
+    *
+    * Under the digest's cap the scan is also filtered by the batch's exact
+    * key values ([[KeyDigest.filter]]). Catalyst pushes that filter below
+    * the delete joins, so delete application touches the batch's rows
+    * instead of every row of the kept files.
     */
   def readForKeys(spark: SparkSession, keys: DataFrame): DataFrame =
     readForKeysAt(spark, keys, currentSnapshot)
@@ -2412,18 +2422,29 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def readForKeysAt(spark: SparkSession, keys: DataFrame,
       at: Option[Snapshot]): DataFrame =
+    if (at.isEmpty) read(spark) else readForKeysAt(spark, keyDigest(keys), at)
+
+  /** [[readForKeysAt]] over a digest the caller already holds — a MERGE
+    * digests its keys once for the read, the cardinality check and the
+    * delete commit.
+    */
+  private[graft] def readForKeysAt(spark: SparkSession, digest: KeyDigest,
+      at: Option[Snapshot]): DataFrame =
     at match {
       case None => read(spark)
       case Some(cur) =>
-        val logicalKeyCols = keys.columns.toSeq
-        val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
-        val disjoint = keyDisjoint(cur.files, keysPhys)
-        readFiles(spark, cur.files.filterNot(disjoint), Some(cur.schemaJson))
+        val disjoint = keyDisjoint(cur.files, digest)
+        val df = readFiles(spark, cur.files.filterNot(disjoint), Some(cur.schemaJson))
+        // key columns the table lacks stay unfiltered (the caller's own
+        // join reports them)
+        val names = digest.columns.map(c => df.columns.find(_.equalsIgnoreCase(c)))
+        if (names.exists(_.isEmpty)) df
+        else digest.filter(names.flatten).fold(df)(df.filter)
     }
 
   /** Plain pinned-snapshot read with NO pruning pass — for callers that
     * know pruning can't pay (e.g. the MV refreshers' small-dim fast path:
-    * the keyDisjoint bounds probe is a Spark job, and skipping IO on a
+    * the readForKeys key digest is a Spark job, and skipping IO on a
     * one-file dim saves nothing).
     */
   private[graft] def readPinned(spark: SparkSession, snap: Snapshot): DataFrame =
@@ -2432,11 +2453,17 @@ final class Icebox(val tableDir: String) {
   /** EQUALITY-delete commit (Iceberg v2's other merge-on-read delete type):
     * records `keys` as an equality-delete file attached to every data file
     * that existed when the deleter read the table — minus files whose
-    * manifest stats PROVE they contain no batch key — and, for
-    * merge-on-read upsert, appends `newData`'s files in the SAME atomic
-    * snapshot. No data file is read or rewritten: a CDC upsert/delete costs
-    * one tiny parquet write regardless of table size. Readers anti-join the
-    * keys away ([[Icebox.applyEqualityDeletes]]); compaction materializes.
+    * manifest stats or blooms PROVE they contain no batch key
+    * ([[keyDisjoint]]) — and, for merge-on-read upsert, appends `newData`'s
+    * files in the SAME atomic snapshot. No data file is read or rewritten:
+    * a CDC upsert/delete costs one tiny parquet write regardless of table
+    * size. Readers anti-join the keys away
+    * ([[Icebox.applyEqualityDeletes]]); compaction materializes.
+    *
+    * `digest`: the caller's [[KeyDigest]] of `keys`, if it holds one (a
+    * MERGE does); otherwise one is built here. Under its cap the delete
+    * file is written from the digest's tuples and the pruning runs no
+    * Spark action, so the commit's only jobs are the two writes.
     *
     * Sequence semantics live in the attach list: `newData`'s own files and
     * any concurrently committed append are NOT attached (the pre-existing
@@ -2445,8 +2472,9 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def commitEqualityDeletes(op: String, keys: DataFrame,
       newData: Option[DataFrame] = None, partitionBy: Seq[String] = Nil,
-      expectHeadId: Long = -2L): Snapshot =
-      retryOnStaleHead {
+      expectHeadId: Long = -2L, digest: Option[KeyDigest] = None): Snapshot = {
+    val dg = digest.getOrElse(keyDigest(keys))
+    retryOnStaleHead {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     // expected-head contract: the caller derived `keys`/`newData` from a
     // specific head snapshot — if ANY commit (including a concurrent run
@@ -2455,15 +2483,11 @@ final class Icebox(val tableDir: String) {
     // the caller re-runs its whole cycle
     if (expectHeadId != -2L && cur.id != expectHeadId) throw Icebox.SupersededCommit
     val tableCols = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType].fieldNames.toSet
-    val logicalKeyCols = keys.columns.toSeq
+    val logicalKeyCols = dg.columns
     require(logicalKeyCols.nonEmpty && logicalKeyCols.forall(tableCols.contains),
       s"equality-delete key columns ${logicalKeyCols.mkString(",")} must be table columns")
-    // delete files store PHYSICAL key names — rename-proof: the read-side
-    // join runs below the logical aliasing, and a later column rename must
-    // not orphan older delete files
-    val keysPhys = keys.select(logicalKeyCols.map(c => col(c).as(toPhysical(c))): _*)
     val preExisting = cur.files.map(_.path).toSet
-    val disjoint = keyDisjoint(cur.files, keysPhys)
+    val disjoint = keyDisjoint(cur.files, dg)
     // READ-AMPLIFICATION BOUND: every attached eq-delete adds a broadcast
     // join to reads of that file, so depth must not grow without limit on a
     // hot file. Files whose depth would EXCEED `write.merge-on-read
@@ -2479,13 +2503,17 @@ final class Icebox(val tableDir: String) {
     val rewritten: Option[DataFrame] =
       if (overFiles.isEmpty) None
       else {
-        val spark = keys.sparkSession
+        val spark = dg.keys.sparkSession
         // survivors of the over-depth files: stacked deletes applied by the
         // read, the NEW keys anti-joined here
+        val distinctKeys = dg.localKeys(spark).getOrElse(dg.keys.dropDuplicates())
         Some(readFiles(spark, overFiles, Some(cur.schemaJson))
-          .join(broadcast(keys.dropDuplicates()), logicalKeyCols, "left_anti"))
+          .join(broadcast(distinctKeys), logicalKeyCols, "left_anti"))
       }
-    val dir = writeEqDeleteFile(keysPhys)
+    // delete files store PHYSICAL key names — rename-proof: the read-side
+    // join runs below the logical aliasing, and a later column rename must
+    // not orphan older delete files
+    val dir = writeEqDeleteFile(dg)
     def attach(parent: Option[Snapshot]): Seq[DataFile] = {
       // DRIFT GUARD: preExisting/overPaths and the rewrite payload were all
       // derived from `cur` — if a cross-process commit moved the head (a
@@ -2513,6 +2541,7 @@ final class Icebox(val tableDir: String) {
       case Some(df) => commit(df, payloadParts, op) { (parent, newFiles) =>
         attach(parent) ++ newFiles
       }
+    }
     }
   }
 
@@ -2696,7 +2725,9 @@ final class Icebox(val tableDir: String) {
           case _ => 1L
         }
         val fpp = props.get("manifest.bloom.fpp").map(_.toDouble).getOrElse(0.03)
-        buildFileBlooms(df.sparkSession, listedRaw.map(_.path), manifestBloomCols, maxRows, fpp)
+        buildFileBlooms(df.sparkSession, listedRaw.map(_.path), manifestBloomCols,
+          StructType(df.schema.filterNot(f => partitionByPhys.exists(_.equalsIgnoreCase(f.name)))),
+          maxRows, fpp)
       }
     // Manifest NDV index (`sketch.ndv.columns`, usually set via ANALYZE
     // TABLE): per-file HyperLogLog sketches as content-addressed side
@@ -3090,10 +3121,11 @@ final class Icebox(val tableDir: String) {
     * driver memory.
     */
   private def buildFileBlooms(spark: SparkSession, paths: Seq[String], cols: Seq[String],
-      expectedItems: Long, fpp: Double): Map[String, Map[String, String]] = {
+      dataSchema: StructType, expectedItems: Long, fpp: Double): Map[String, Map[String, String]] = {
     if (paths.isEmpty || cols.isEmpty) return Map.empty
     import org.apache.spark.sql.functions.{col => fcol, input_file_name, xxhash64}
-    val base = spark.read.parquet(paths: _*)
+    // the commit's own data schema: no footer-reading schema inference job
+    val base = spark.read.schema(dataSchema).parquet(paths: _*)
     val present = cols.filter(base.columns.contains)
     if (present.isEmpty) return Map.empty
     val hashed = base.select(
@@ -3955,11 +3987,20 @@ object Icebox {
     val rows = df.limit(EqKeyCacheMaxRows + 1).collect().toSeq
     if (rows.length > EqKeyCacheMaxRows) df
     else {
-      if (eqKeyCache.size >= EqKeyCacheMaxEntries) eqKeyCache.clear()
-      eqKeyCache.put(dir, (df.schema, rows))
+      cacheEqDeleteKeys(dir, df.schema, rows)
       spark.createDataFrame(rows.asJava, df.schema)
     }
   }
+
+  /** Admit one delete dir's distinct key tuples to [[eqKeyCache]] —
+    * `schema` must be what a parquet read of `dir` returns. Also called by
+    * the writer, which holds the tuples it just wrote.
+    */
+  private[table] def cacheEqDeleteKeys(dir: String, schema: StructType, rows: Seq[Row]): Unit =
+    if (rows.length <= EqKeyCacheMaxRows) {
+      if (eqKeyCache.size >= EqKeyCacheMaxEntries) eqKeyCache.clear()
+      eqKeyCache.put(dir, (schema, rows))
+    }
 
   /** Apply EQUALITY deletes to a file-relation DataFrame: a row is removed
     * iff its key tuple appears in an equality-delete file AND its data file

@@ -241,4 +241,69 @@ class MergeSqlSpec extends SparkSpec {
     t.read(spark).count() shouldBe 4L
     t.read(spark).filter($"id" === 1L).select("name").as[String].head() shouldBe "a"
   }
+
+  // The three cardinality cases again in merge-on-read mode, where the
+  // source's key digest answers the check; "fallback" caps the digest at 2
+  // tuples and pads each source past it, so the check aggregates instead.
+  for ((mode, props, pad) <- Seq(
+      ("merge-on-read", Map("write.merge.mode" -> "merge-on-read"), Nil),
+      ("merge-on-read fallback", Map("write.merge.mode" -> "merge-on-read",
+        "bloom.attach.max-keys" -> "2"), Seq(100L, 101L, 102L)))) {
+    val tag = if (pad.isEmpty) "mor" else "morfb"
+    def padded(rows: Seq[(java.lang.Long, String, Double)]) =
+      (rows ++ pad.map(k => (java.lang.Long.valueOf(k), s"p$k", 0.0))).toDF("id", "name", "amount")
+    def overCap(t: Icebox, src: String): Unit =
+      t.keyDigest(spark.table(src).select("id")).entries.isEmpty shouldBe pad.nonEmpty
+
+    test(s"$mode: cardinality violation errors and leaves the table untouched") {
+      val t = freshTarget(s"t_card_$tag")
+      t.setProperties(props)
+      padded(Seq((2L, "x", 1.0), (2L, "y", 2.0))).createOrReplaceTempView(s"src_card_$tag")
+      overCap(t, s"src_card_$tag")
+      val e = intercept[IllegalArgumentException] {
+        MergeSql.merge(spark,
+          s"""MERGE INTO t_card_$tag t USING src_card_$tag s ON t.id = s.id
+            |WHEN MATCHED THEN UPDATE SET name = s.name
+            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      }
+      e.getMessage should include("cardinality")
+      t.read(spark).count() shouldBe 3
+    }
+
+    test(s"$mode: duplicate source keys absent from the target insert") {
+      val t = freshTarget(s"t_cf_$tag")
+      t.setProperties(props)
+      padded(Seq((10L, "n1", 1.0), (10L, "n2", 2.0), (2L, "B", 2.0)))
+        .createOrReplaceTempView(s"src_cf_$tag")
+      overCap(t, s"src_cf_$tag")
+      val snap = MergeSql.merge(spark,
+        s"""MERGE INTO t_cf_$tag t USING src_cf_$tag s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      snap.operation shouldBe "merge-mor"
+      t.read(spark).filter($"id" === 10L).count() shouldBe 2L
+      t.read(spark).filter($"id" === 2L).select("name").as[String].collect() shouldBe Array("B")
+      t.read(spark).count() shouldBe 5L + pad.size
+    }
+
+    test(s"$mode: duplicate NULL keys never violate") {
+      val t = Icebox(tmpDir(s"merge-card-null-$tag"))
+      t.overwrite(Seq[(java.lang.Long, String, Double)]((null, "z", 0.0), (1L, "a", 1.0))
+        .toDF("id", "name", "amount"))
+      t.setProperties(props)
+      MergeSql.register(s"t_cn_$tag", t)
+      padded(Seq((null, "x", 1.0), (null, "y", 2.0), (1L, "A", 1.0)))
+        .createOrReplaceTempView(s"src_cn_$tag")
+      overCap(t, s"src_cn_$tag")
+      MergeSql.merge(spark,
+        s"""MERGE INTO t_cn_$tag t USING src_cn_$tag s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      // NULL-key source rows are all unmatched inserts; the NULL target row
+      // survives; key 1 is updated in place
+      t.read(spark).count() shouldBe 4L + pad.size
+      t.read(spark).filter($"name" === "z").count() shouldBe 1L
+      t.read(spark).filter($"id" === 1L).select("name").as[String].collect() shouldBe Array("A")
+    }
+  }
 }
