@@ -103,36 +103,40 @@ object MergeSql {
 
     // MERGE-ON-READ (`write.merge.mode = merge-on-read`, equi ON, no BY
     // SOURCE clause): the merge commits without a whole-table rewrite, so
-    // only target rows holding a source key take part. ONE key digest of
-    // the source (KeyDigest: distinct key tuples, their counts and hashes,
-    // one Spark action) drives every key-dependent step: the target read
-    // prunes files by manifest stats and blooms and filters rows by the
-    // exact keys, the cardinality check reads duplicate keys from it, and
-    // the equality-delete commit writes it. A point-MERGE into a huge
-    // table reads O(holding files) and applies deletes to O(batch) rows.
-    // The copy-on-write path MUST see the full table (it overwrites), so
-    // any fallback condition disables all of this.
+    // only target rows holding a source key take part, and the target read
+    // prunes files by manifest stats and blooms (readForKeys). With a WHEN
+    // MATCHED clause, ONE key digest of the source (KeyDigest: distinct
+    // key tuples, their counts and hashes, one Spark action) drives every
+    // key-dependent step: the read's pruning and exact key filter, the
+    // cardinality check and the equality-delete commit. A point-MERGE into
+    // a huge table reads O(holding files) and applies deletes to O(batch)
+    // rows. An insert-only merge has no check or delete to share a digest
+    // with, so its read digests only as readForKeys would. The
+    // copy-on-write path MUST see the full table (it overwrites), so any
+    // fallback condition disables all of this.
+    val morPrunable = props(icebox) == "merge-on-read" &&
+      m.notMatchedBySourceActions.isEmpty && equiPairs.isDefined &&
+      (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty)
+    lazy val keyDf = srcDf.select(equiPairs.get.map { case (tc, sc) => col(sc).as(tc) }: _*)
     val digest: Option[KeyDigest] =
-      if (props(icebox) == "merge-on-read" && m.notMatchedBySourceActions.isEmpty &&
-          equiPairs.isDefined && (m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty))
-        Some(icebox.keyDigest(
-          srcDf.select(equiPairs.get.map { case (tc, sc) => col(sc).as(tc) }: _*)))
-      else None
-    val tgt = digest
-      .fold(icebox.read(spark))(icebox.readForKeysAt(spark, _, icebox.currentSnapshot))
-      .alias(targetAlias)
+      Option.when(morPrunable && m.matchedActions.nonEmpty)(icebox.keyDigest(keyDf))
+    val tgt = (digest match {
+      case Some(d) => icebox.readForKeysAt(spark, d, icebox.currentSnapshot)
+      case None if morPrunable => icebox.readForKeys(spark, keyDf)
+      case None => icebox.read(spark)
+    }).alias(targetAlias)
 
     lazy val matched = tgt.join(src, cond, "inner")
     if (m.matchedActions.nonEmpty) equiPairs match {
       case Some(pairs) =>
         // EQUI fast path: a target row matches >1 source row iff some
         // source key tuple repeats AND exists in the target — the repeated
-        // non-null tuples come from the merge-on-read digest, or else from
-        // one aggregation over the (small) SOURCE, and only when there are
-        // some is the target semi-probed. The generic check below
-        // aggregates the FULL target twice; at 100 TB that is the
-        // difference between a broadcast-sized check and two table-wide
-        // shuffles.
+        // non-null tuples come from the merge-on-read digest, or else (no
+        // digest, or one over its cap) from one aggregation over the
+        // (small) SOURCE, and only when there are some is the target
+        // semi-probed. The generic check below aggregates the FULL target
+        // twice; at 100 TB that is the difference between a
+        // broadcast-sized check and two table-wide shuffles.
         val dupKeys: Option[DataFrame] = digest.flatMap(_.duplicates) match {
           case Some(rows) =>
             Option.when(rows.nonEmpty)(spark.createDataFrame(rows.asJava, digest.get.schema))
@@ -202,7 +206,7 @@ object MergeSql {
     lazy val inserts = insertsFrom(src.join(tgt, cond, "left_anti"))
 
     val snap = digest match {
-      case Some(d) if m.matchedActions.nonEmpty =>
+      case Some(d) =>
         // MERGE-ON-READ commit: ONE equality-delete file (the source's key
         // tuples — deleting an absent key is a no-op, so the distinct
         // source keys stand in for "matched keys" without an extra join)
@@ -216,15 +220,20 @@ object MergeSql {
         // NOT MATCHED inserts (target key null). Both branches share the
         // join's exchanges, so the target is read once, where an inner
         // join plus a left_anti would read and shuffle it twice.
+        // The NOT MATCHED branch is projected back to the source's columns
+        // under the source alias: Spark resolves NOT MATCHED conditions
+        // and INSERT values against the source alone, so an unqualified
+        // name must not meet a target column of the same name
         val joined = src.join(tgt, cond, "left_outer")
         val isMatched = col(s"$targetAlias.${equiPairs.get.head._1}").isNotNull
         val mergedMatched = applyActions(joined.filter(isMatched), m.matchedActions)
         val merged =
           if (m.notMatchedActions.isEmpty) mergedMatched
-          else mergedMatched.unionByName(insertsFrom(joined.filter(!isMatched)))
-        icebox.commitEqualityDeletes("merge-mor", d.keys, Some(merged),
-          icebox.partitionColumns, digest = digest)
-      case Some(_) =>
+          else mergedMatched.unionByName(insertsFrom(
+            joined.filter(!isMatched).select(col(s"$sourceAlias.*")).alias(sourceAlias)))
+        icebox.commitEqualityDeletes("merge-mor", d, Some(merged),
+          icebox.partitionColumns, -2L)
+      case None if morPrunable =>
         // no matched action → matched target rows stay in place; the merge
         // degenerates to an append of the unmatched source rows
         icebox.append(inserts, icebox.partitionColumns)

@@ -2350,6 +2350,16 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def keyDigest(keys: DataFrame): KeyDigest = KeyDigest(keys, bloomMaxKeys)
 
+  /** The digest a read or commit handed bare keys builds: a full
+    * [[keyDigest]] when some key column is bloom-indexed in `files` — its
+    * one action stands in for a hash probe per such column — else
+    * [[KeyDigest.boundsOnly]], so a caller with no bloom to probe runs the
+    * zero or one bounds aggregate it always ran, and reads unfiltered.
+    */
+  private def digestFor(keys: DataFrame, files: Seq[DataFile]): KeyDigest =
+    if (keys.columns.exists(c => files.exists(_.blooms.contains(toPhysical(c))))) keyDigest(keys)
+    else KeyDigest.boundsOnly(keys)
+
   /** Build the "provably holds NONE of the batch's keys" predicate over
     * `files` — shared by the eq-delete attach pruning and [[readForKeys]].
     * Runs no Spark action when the digest is under its cap; above it, the
@@ -2407,10 +2417,13 @@ final class Icebox(val tableDir: String) {
     * unsorted bloom-indexed table the membership filters prune, and with
     * neither this degrades to a plain [[read]].
     *
-    * Under the digest's cap the scan is also filtered by the batch's exact
-    * key values ([[KeyDigest.filter]]). Catalyst pushes that filter below
-    * the delete joins, so delete application touches the batch's rows
-    * instead of every row of the kept files.
+    * When some key column is bloom-indexed, the keys are digested
+    * ([[KeyDigest]], one action in place of the per-column hash probes),
+    * and under [[KeyDigest.FilterMaxKeys]] tuples the scan is also filtered
+    * by the batch's exact key values ([[KeyDigest.filter]]). Catalyst
+    * pushes that filter below the delete joins, so delete application
+    * touches the batch's rows instead of every row of the kept files.
+    * Without blooms only the bounds aggregate runs, as it always has.
     */
   def readForKeys(spark: SparkSession, keys: DataFrame): DataFrame =
     readForKeysAt(spark, keys, currentSnapshot)
@@ -2422,11 +2435,11 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def readForKeysAt(spark: SparkSession, keys: DataFrame,
       at: Option[Snapshot]): DataFrame =
-    if (at.isEmpty) read(spark) else readForKeysAt(spark, keyDigest(keys), at)
+    readForKeysAt(spark, digestFor(keys, at.map(_.files).getOrElse(Nil)), at)
 
   /** [[readForKeysAt]] over a digest the caller already holds — a MERGE
     * digests its keys once for the read, the cardinality check and the
-    * delete commit.
+    * delete commit, and its read is key-filtered with or without blooms.
     */
   private[graft] def readForKeysAt(spark: SparkSession, digest: KeyDigest,
       at: Option[Snapshot]): DataFrame =
@@ -2460,10 +2473,11 @@ final class Icebox(val tableDir: String) {
     * size. Readers anti-join the keys away
     * ([[Icebox.applyEqualityDeletes]]); compaction materializes.
     *
-    * `digest`: the caller's [[KeyDigest]] of `keys`, if it holds one (a
-    * MERGE does); otherwise one is built here. Under its cap the delete
-    * file is written from the digest's tuples and the pruning runs no
-    * Spark action, so the commit's only jobs are the two writes.
+    * The keys are digested as [[readForKeys]] digests them: fully when a
+    * key column is bloom-indexed, else bounds only. Under the digest's cap
+    * the delete file is written from its tuples and the pruning runs no
+    * Spark action, so the commit's only jobs are the digest and the two
+    * writes; otherwise the keys are deduplicated distributed, as before.
     *
     * Sequence semantics live in the attach list: `newData`'s own files and
     * any concurrently committed append are NOT attached (the pre-existing
@@ -2472,8 +2486,18 @@ final class Icebox(val tableDir: String) {
     */
   private[graft] def commitEqualityDeletes(op: String, keys: DataFrame,
       newData: Option[DataFrame] = None, partitionBy: Seq[String] = Nil,
-      expectHeadId: Long = -2L, digest: Option[KeyDigest] = None): Snapshot = {
-    val dg = digest.getOrElse(keyDigest(keys))
+      expectHeadId: Long = -2L): Snapshot =
+    commitEqualityDeletes(op, digestFor(keys, currentSnapshot.map(_.files).getOrElse(Nil)),
+      newData, partitionBy, expectHeadId)
+
+  /** [[commitEqualityDeletes]] of the keys a caller has already digested
+    * (a MERGE digests its source keys once for its read, its cardinality
+    * check and this commit). `digest` is evaluated once, on the first
+    * attempt, after the expected-head check.
+    */
+  private[graft] def commitEqualityDeletes(op: String, digest: => KeyDigest,
+      newData: Option[DataFrame], partitionBy: Seq[String], expectHeadId: Long): Snapshot = {
+    lazy val dg = digest
     retryOnStaleHead {
     val cur = currentSnapshot.getOrElse(sys.error(s"no table at $tableDir"))
     // expected-head contract: the caller derived `keys`/`newData` from a

@@ -92,7 +92,23 @@ class KeyDigestSpec extends SparkSpec {
       keys.where(col("k").isNotNull).select(xxhash64(col("k"))).as[Long].collect().toSet
     // three distinct tuples: over a cap of 2, only bounds remain
     KeyDigest(keys, 2).entries shouldBe None
+    KeyDigest(keys, 2).duplicates shouldBe None
     KeyDigest(keys, 2).bounds._1 shouldBe Map(0 -> (1.0, 2.0))
+  }
+
+  test("a bounds-only digest runs no action and knows only its bounds") {
+    val dups = Seq(1L, 1L, 2L, 3L).toDF("k")
+    val b = KeyDigest.boundsOnly(dups)
+    (b.entries, b.duplicates, b.hashes, b.filter(Seq("k"))) shouldBe ((None, None, None, None))
+    b.bounds._1 shouldBe Map(0 -> (1.0, 3.0))
+  }
+
+  test("the key filter stops at FilterMaxKeys tuples") {
+    val n = KeyDigest.FilterMaxKeys
+    KeyDigest(spark.range(n).toDF("k"), n + 10).filter(Seq("k")) shouldBe defined
+    val over = KeyDigest(spark.range(n + 1).toDF("k"), n + 10)
+    over.entries.map(_.size) shouldBe Some(n + 1)
+    over.filter(Seq("k")) shouldBe None
   }
 
   test("the key filter keeps exactly the batch's values, NULL only when the batch holds one") {
@@ -109,8 +125,9 @@ class KeyDigestSpec extends SparkSpec {
       Some(0L)
   }
 
-  test("readForKeys filters the scan to the batch's keys, below the delete joins") {
+  test("readForKeys on a bloom-indexed key filters the scan to the batch's keys, below the delete joins") {
     val t = Icebox(tmpDir("kd-read"))
+    t.setProperties(Map("manifest.bloom.columns" -> "k"))
     t.overwrite((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v"))
     t.deleteByKeys(Seq(5L, 6L).toDF("k"))
     val keys = Seq(5L, 7L, 2000L).toDF("k")
@@ -122,9 +139,19 @@ class KeyDigestSpec extends SparkSpec {
     topJoin shouldBe defined
     topJoin.get.left.collect { case f: Filter => f }
       .exists(_.condition.sql.contains("IN")) shouldBe true
+    def hasKeyFilter(df: DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect { case f: Filter => f }
+        .exists(_.condition.sql.contains("IN"))
     // over the cap no filter is added, and rows stay exact
     t.setProperties(Map("bloom.attach.max-keys" -> "2"))
+    hasKeyFilter(t.readForKeys(spark, keys)) shouldBe false
     t.readForKeys(spark, keys).join(keys, Seq("k")).as[(Long, String)].collect().toSeq shouldBe
       Seq((7L, "v7"))
+    // without a bloom-indexed key column the keys are not digested: no
+    // filter, exact rows
+    val plain = Icebox(tmpDir("kd-read-plain"))
+    plain.overwrite((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v"))
+    hasKeyFilter(plain.readForKeys(spark, keys)) shouldBe false
+    plain.readForKeys(spark, keys).join(keys, Seq("k")).count() shouldBe 2L
   }
 }

@@ -80,6 +80,41 @@ class MergeJobsSpec extends SparkSpec {
     n shouldBe 8
   }
 
+  // A read or delete handed bare keys digests them only when a key column
+  // is bloom-indexed, where the digest stands in for the hash probes;
+  // otherwise it runs the bounds aggregate alone, as it always has.
+  private def plainTable(name: String): Icebox = {
+    val t = Icebox(tmpDir(s"mergejobs-$name"))
+    t.overwrite((1L to 200L).map(i => (i, java.sql.Date.valueOf("2024-01-01").toLocalDate
+      .plusDays(i).toString, s"n$i")).toDF("id", "day", "name")
+      .selectExpr("id", "CAST(day AS DATE) AS day", "name"))
+    t
+  }
+
+  test("readForKeys over keys with no bounds and no blooms runs no job") {
+    val t = plainTable("read_date")
+    val keys = Seq("2024-01-05").toDF("day").selectExpr("CAST(day AS DATE) AS day")
+    var df: org.apache.spark.sql.DataFrame = null
+    jobs { df = t.readForKeys(spark, keys) } shouldBe 0
+    df.join(keys, "day").count() shouldBe 1L
+  }
+
+  test("readForKeys and deleteByKeys over numeric keys with no blooms run only the bounds aggregate") {
+    val t = plainTable("read_long")
+    val keys = Seq(5L, 7L).toDF("id")
+    // the bounds aggregate (its shuffle stage and its result); the delete
+    // adds the distributed dedupe-and-write of the delete file
+    (jobs(t.readForKeys(spark, keys)), jobs(t.deleteByKeys(keys))) shouldBe ((2, 4))
+    t.read(spark).count() shouldBe 198L
+  }
+
+  test("readForKeys over a bloom-indexed key runs one digest in place of the probes") {
+    val t = morTable("t_jobs_bloom")
+    // one digest (its shuffle stage and its result), no separate bounds
+    // aggregate or hash probe
+    jobs(t.readForKeys(spark, Seq(5L, 7L).toDF("id"))) shouldBe 2
+  }
+
   test("the first read after a MERGE re-reads no delete file") {
     val t = morTable("t_jobs_read")
     Seq((5L, "E", 1.0), (6L, "F", 1.0)).toDF("id", "name", "amount")

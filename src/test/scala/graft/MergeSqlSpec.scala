@@ -242,6 +242,23 @@ class MergeSqlSpec extends SparkSpec {
     t.read(spark).filter($"id" === 1L).select("name").as[String].head() shouldBe "a"
   }
 
+  test("merge-on-read: NOT MATCHED conditions and INSERT values resolve against the source alone") {
+    val t = freshTarget("t_mor_unq")
+    t.setProperties(Map("write.merge.mode" -> "merge-on-read"))
+    Seq((2L, "B", 200.0), (4L, "d", 40.0), (5L, "tiny", 1.0))
+      .toDF("id", "name", "amount").createOrReplaceTempView("src_unq")
+    // id, name and amount name both a source and a target column; Spark
+    // resolves the NOT MATCHED side against the source
+    val snap = MergeSql.merge(spark,
+      """MERGE INTO t_mor_unq t USING src_unq s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET name = s.name
+        |WHEN NOT MATCHED AND amount > 10 THEN INSERT (id, name, amount) VALUES (id, name, amount)
+        |""".stripMargin)
+    snap.operation shouldBe "merge-mor"
+    t.read(spark).as[(Long, String, Double)].collect().sortBy(_._1) shouldBe Array(
+      (1L, "a", 10.0), (2L, "B", 20.0), (3L, "c", 30.0), (4L, "d", 40.0))
+  }
+
   // The three cardinality cases again in merge-on-read mode, where the
   // source's key digest answers the check; "fallback" caps the digest at 2
   // tuples and pads each source past it, so the check aggregates instead.
