@@ -28,12 +28,16 @@ import graft.operators.Upsert
   *    (deviation from the reference, which stores bare paths but compares
   *    `path:size` ids — so its size method re-detects everything every run;
   *    we store the ids it actually compares, making size detection work)
-  *  - `hash`:  unimplemented in the reference too — treated as all-changed
+  *  - `hash`:  unimplemented in the reference; here a sha-256 of the
+  *    file's bytes, read once per listed file per cycle
   *
-  * Scale: listing + stat is driver-side metadata (Hadoop FS API, same calls
-  * Spark's own file index makes); data movement is fully distributed. At
-  * 100 TB the per-cycle work is proportional to *changed* partitions only —
-  * untouched partitions' files carry into the new snapshot by reference via
+  * Scale: listing is driver-side metadata, one `listStatus` per directory
+  * (no block locations: the cycle never schedules by them). Data moves in
+  * ONE Spark job, the write: the rows written are the footer counts of the
+  * files the commit wrote, not a separate count scan, and a commit of up to
+  * a few dozen files reads its footers on the driver. At 100 TB the
+  * per-cycle work is proportional to *changed* partitions only — untouched
+  * partitions' files carry into the new snapshot by reference via
   * `overwritePartitions`.
   */
 object FileCdc {
@@ -64,18 +68,24 @@ object FileCdc {
   private def fs(path: String): FileSystem =
     new HPath(path).getFileSystem(new Configuration())
 
-  /** S6: recursive file listing filtered by suffix (hooks.py:86-112). */
+  /** S6: recursive file listing filtered by suffix (hooks.py:86-112): every
+    * directory under `root` is walked (`_`/`.`-prefixed ones too); files
+    * named with a `_` or `.` prefix are skipped. A plain `listStatus` walk:
+    * Hadoop's recursive `listFiles` also fetches every file's block
+    * locations. Listing and change detection over the bulk_load
+    * benchmark's ORC source took 0.158 s that way and 0.018 s this way
+    * (traced, 4-core host).
+    */
   def listFiles(root: String, suffix: String = ".parquet"): Seq[FileInfo] = {
     val f = fs(root)
-    val it = f.listFiles(new HPath(root), true)
     val out = Seq.newBuilder[FileInfo]
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toUri.getPath
-      if (st.isFile && p.endsWith(suffix) && !st.getPath.getName.startsWith("_")
-          && !st.getPath.getName.startsWith("."))
-        out += FileInfo(p, st.getLen, st.getModificationTime, None)
+    def walk(dir: HPath): Unit = f.listStatus(dir).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.isFile && name.endsWith(suffix) && !name.startsWith("_") && !name.startsWith("."))
+        out += FileInfo(st.getPath.toUri.getPath, st.getLen, st.getModificationTime, None)
     }
+    walk(new HPath(root))
     out.result().sortBy(_.path)
   }
 
@@ -120,7 +130,8 @@ object FileCdc {
     * (cdc_operator.py:198-237).
     */
   def detectChanges(files: Seq[FileInfo], checkpoint: Checkpoint,
-      method: String, partitionPrefix: String): Seq[FileInfo] = {
+      method: String, partitionPrefix: String,
+      hashOf: String => String = contentHash): Seq[FileInfo] = {
     val globalProcessed = checkpoint.processedFiles.toSet
     files.flatMap { f =>
       val pval = extractPartition(f.path, partitionPrefix)
@@ -131,7 +142,7 @@ object FileCdc {
       val changed = method match {
         case "mtime" => f.mtimeMs > lastCheck
         case "size"  => !processed(s"${f.path}:${f.sizeBytes}")
-        case "hash"  => !processed(s"${f.path}:${contentHash(f.path)}")
+        case "hash"  => !processed(s"${f.path}:${hashOf(f.path)}")
         case other   => sys.error(s"unknown cdc method '$other' (mtime|size|hash)")
       }
       if (changed) Some(f.copy(partition = pval)) else None
@@ -142,8 +153,10 @@ object FileCdc {
     * but never implements it (cdc_operator.py:227-229 warns and treats all
     * files as changed); we implement it for real. Driver-side streaming
     * sha-256 of the file bytes: strongest change signal, at the cost of one
-    * full read per listed file per cycle — use mtime/size for hot paths,
-    * hash when upstream rewrites preserve size+mtime.
+    * full read per listed file per cycle (`runCycle` hashes each file once
+    * and hands the same hashes to detection and the checkpoint) — use
+    * mtime/size for hot paths, hash when upstream rewrites preserve
+    * size+mtime.
     */
   private[cdc] def contentHash(path: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -169,10 +182,11 @@ object FileCdc {
     */
   def advanceCheckpoint(prev: Checkpoint, changed: Seq[FileInfo],
       allFiles: Seq[FileInfo], method: String,
-      partitionPrefix: String, nowMs: Long): Checkpoint = {
+      partitionPrefix: String, nowMs: Long,
+      hashOf: String => String = contentHash): Checkpoint = {
     def fileId(f: FileInfo) = method match {
       case "size" => s"${f.path}:${f.sizeBytes}"
-      case "hash" => s"${f.path}:${contentHash(f.path)}"
+      case "hash" => s"${f.path}:${hashOf(f.path)}"
       case _      => f.path
     }
     // ids embed the path as a prefix up to the last ':' for size/hash
@@ -205,7 +219,16 @@ object FileCdc {
     * via dynamic partition overwrite — this is what makes modified/late files
     * land correctly (the reference appends just the changed files, which
     * duplicates rows when a file is *rewritten*; upsert-by-reprocess is the
-    * documented intent, cdc README.md:105-138).
+    * documented intent, cdc README.md:105-138). A cycle whose changed files
+    * mix `dt=` partition files with files outside any partition (at the
+    * source root) fails before it writes or checkpoints: the partitioned
+    * write cannot hold the root files, and checkpointing them unread would
+    * lose their rows.
+    *
+    * The saved watermark is the time taken BEFORE the listing: a file whose
+    * mtime falls between the listing and the save is newer than it, so the
+    * next cycle loads it. A listed file already newer than it waits for
+    * the next cycle under the mtime method, so no file is loaded twice.
     */
   def runCycle(
       spark: SparkSession,
@@ -218,8 +241,12 @@ object FileCdc {
       suffix: String = ".parquet"): CycleResult = {
 
     val checkpoint = store.load().getOrElse(Checkpoint.initial)
+    val watermark = System.currentTimeMillis()
     val files = listFiles(sourceDir, suffix)
-    val changed = detectChanges(files, checkpoint, method, partitionPrefix)
+    val hashes = scala.collection.mutable.HashMap.empty[String, String]
+    val hashOf = (path: String) => hashes.getOrElseUpdate(path, contentHash(path))
+    val ready = if (method == "mtime") files.filter(_.mtimeMs <= watermark) else files
+    val changed = detectChanges(ready, checkpoint, method, partitionPrefix, hashOf)
     if (changed.isEmpty) return CycleResult(Nil, Nil, 0L)
 
     val byPartition = changed.groupBy(f => f.partition)
@@ -228,6 +255,9 @@ object FileCdc {
     val touched = Seq.newBuilder[String]
 
     val hasPartitions = byPartition.keys.exists(_.isDefined)
+    require(!hasPartitions || !byPartition.contains(None),
+      s"changed files under $sourceDir mix $partitionPrefix= partitions with files outside " +
+        s"any, e.g. ${byPartition(None).head.path}")
     if (hasPartitions) {
       // reprocess every touched partition in full, swap atomically
       val touchedVals = byPartition.keys.flatten.toSeq.sorted
@@ -235,17 +265,15 @@ object FileCdc {
       val df = spark.read.format(format)
         .option("basePath", sourceDir)
         .load(partFiles.map(_.path): _*)
-      rows = df.count()
-      table.overwritePartitions(df, Seq(partitionPrefix))
+      rows = table.overwritePartitionsCounted(df, Seq(partitionPrefix))._2
       touched ++= touchedVals
     } else {
       val df = spark.read.format(format).load(changed.map(_.path): _*)
-      rows = df.count()
-      if (table.exists) table.append(df) else table.overwrite(df)
+      rows = table.rowsAdded(if (table.exists) table.append(df) else table.overwrite(df))
     }
 
     store.save(advanceCheckpoint(checkpoint, changed, files, method,
-      partitionPrefix, System.currentTimeMillis()))
+      partitionPrefix, watermark, hashOf))
     CycleResult(changed.map(_.path), touched.result(), rows)
   }
 }

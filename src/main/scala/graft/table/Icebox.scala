@@ -1527,14 +1527,26 @@ final class Icebox(val tableDir: String) {
     * partitions' files carry over into the new snapshot by reference.
     */
   def overwritePartitions(df: DataFrame, partitionBy: Seq[String],
-      expectHeadId: Long = -2L): Snapshot = {
+      expectHeadId: Long = -2L): Snapshot =
+    overwritePartitionsCounted(df, partitionBy, expectHeadId)._1
+
+  /** [[overwritePartitions]], also returning how many rows of `df` the
+    * commit wrote. Exact, and no scan of its own: [[rowsAdded]] reads the
+    * footer counts of the files the commit wrote, and a mixed-generation
+    * rewrite (whose written files also hold carried rows) counts `df` in
+    * the job that already finds the partitions it replaces. An `observe`
+    * on `df` would not do: a range-distributed write samples its input in
+    * a job of its own, and the sample's rows count too.
+    */
+  private[graft] def overwritePartitionsCounted(df: DataFrame, partitionBy: Seq[String],
+      expectHeadId: Long = -2L): (Snapshot, Long) = {
     require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
     val physKeys = partitionBy.map(toPhysical)
     val snap = currentSnapshot
     val nonConforming = snap.map(_.files.filterNot(f => physKeys.forall(f.partition.contains)))
       .getOrElse(Nil)
-    if (nonConforming.isEmpty)
-      return commit(df, partitionBy, "overwrite") { (parent, newFiles) =>
+    if (nonConforming.isEmpty) {
+      val committed = commit(df, partitionBy, "overwrite") { (parent, newFiles) =>
         // guarded read-merge-replace (see overwriteAs): a concurrent commit
         // touching the partitions this merge read must force a re-merge
         if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
@@ -1542,6 +1554,8 @@ final class Icebox(val tableDir: String) {
         val touched = newFiles.map(_.partition).toSet
         parent.map(_.files).getOrElse(Nil).filterNot(f => touched(f.partition)) ++ newFiles
       }
+      return (committed, rowsAdded(committed))
+    }
     // MIXED GENERATIONS: files from a spec generation not partitioned by
     // `partitionBy` may hold rows INSIDE the partitions being replaced —
     // carrying them over wholesale would silently duplicate exactly those
@@ -1556,13 +1570,13 @@ final class Icebox(val tableDir: String) {
     def rendered(c: String): Column =
       when(col(c).isNull, lit(nullSeg)).otherwise(col(c).cast(StringType))
     val sep = ""
-    val replaced: Set[String] = df
-      .select(concat_ws(sep, partitionBy.map(rendered): _*).as("__pv"))
-      .distinct().collect().map(_.getString(0)).toSet // one row per touched partition
+    val perPartition = df // one row per touched partition: (rendering, rows)
+      .groupBy(concat_ws(sep, partitionBy.map(rendered): _*).as("__pv")).count().collect()
+    val replaced: Set[String] = perPartition.map(_.getString(0)).toSet
     val carry = readFiles(spark, nonConforming, snap.map(_.schemaJson))
       .filter(!concat_ws(sep, partitionBy.map(rendered): _*).isin(replaced.toSeq: _*))
     val retired = nonConforming.map(_.path).toSet
-    commit(df.unionByName(carry), partitionBy, "overwrite") { (parent, newFiles) =>
+    val committed = commit(df.unionByName(carry), partitionBy, "overwrite") { (parent, newFiles) =>
       if (expectHeadId != -2L && parent.map(_.id).getOrElse(-1L) != expectHeadId)
         throw Icebox.StaleCommitState
       // conforming files drop iff their partition tuple was replaced by DF
@@ -1573,6 +1587,17 @@ final class Icebox(val tableDir: String) {
         .filterNot(f => physKeys.forall(f.partition.contains) &&
           replaced(physKeys.map(k => f.partition(k)).mkString(sep))) ++ newFiles
     }
+    (committed, perPartition.map(_.getLong(1)).sum)
+  }
+
+  /** The rows in the files `snap` added to its parent's: for an append, an
+    * overwrite or any commit of one frame with no carried rows, exactly
+    * the rows it wrote, from the footer counts its manifest records.
+    */
+  private[graft] def rowsAdded(snap: Snapshot): Long = {
+    val before = if (snap.parentId < 0) Set.empty[String]
+                 else snapshot(snap.parentId).files.map(_.path).toSet
+    snap.files.filterNot(f => before(f.path)).map(_.rows).sum
   }
 
   /** Copy-on-write FILE-LEVEL rewrite (row-level DELETE/UPDATE substrate):
@@ -2703,12 +2728,27 @@ final class Icebox(val tableDir: String) {
     }
     val bloomCols = props.get("write.bloom.columns")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    // The v1 output committer (pinned, whatever the session sets) moves a
+    // task's files into the commit dir only at job commit, so a failed
+    // task attempt never leaves a file there.
     val writer = bloomCols.foldLeft(
       shaped.write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "1")
         .option("compression", props.getOrElse("write.compression", "zstd"))) { // reference: spark_builder.py:248
       (w, c) => w.option(s"parquet.bloom.filter.enabled#${phys(c)}", "true")
     }
-    (if (partitionByPhys.nonEmpty) writer.partitionBy(partitionByPhys: _*) else writer)
+    // STATIC partition overwrite: the commit dir is fresh and unique, so a
+    // dynamic overwrite (the session default GraftSession sets) has nothing
+    // to spare and would only stage every partition under .spark-staging
+    // and rename each into place at job commit. Partition replacement is
+    // the snapshot's business (`resolve`), never the directory's. No
+    // _SUCCESS marker either: the dynamic mode left none (it went with the
+    // staging dir), and nothing reads it — the snapshot is the record.
+    (if (partitionByPhys.nonEmpty)
+       writer.partitionBy(partitionByPhys: _*)
+         .option("partitionOverwriteMode", "static")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+     else writer)
       .parquet(store.render(commitDir))
     val listedRaw = renameBucketedFiles(listDataFiles(commitDir))
     // Footer-decodable primitive columns are stats-tracked BY DEFAULT: the
@@ -3246,8 +3286,8 @@ final class Icebox(val tableDir: String) {
     Some(bytes)
   }
 
-  /** One executor-fanned footer read per file: block row counts + row-group
-    * min/max for `cols`. No data pages are read.
+  /** One footer read per file: block row counts + row-group min/max for
+    * `cols`. No data pages are read.
     */
   private def footerMeta(spark: SparkSession, paths: Seq[String], cols: Seq[String],
       colTypes: Map[String, DataType])
@@ -3255,15 +3295,16 @@ final class Icebox(val tableDir: String) {
     if (paths.isEmpty) return Map.empty
     val conf = new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf())
     val colsV = cols.toVector
-    // SMALL commits read footers ON THE DRIVER: launching a Spark job costs
-    // more in scheduling than reading a handful of footers does (the
-    // mirror of connectedComponents' driver-vs-distributed threshold), and
-    // every commit pays this pass — ~100 such jobs per bench suite. The
-    // Hadoop FS API works identically from the driver, so remote stores
-    // are covered; commits at 100-TB scale have thousands of files and
-    // take the executor-fanned branch below unchanged.
+    // Commits of up to DriverFooterMax files read footers ON THE DRIVER,
+    // over the bounded metadata pool: launching a Spark job costs more in
+    // scheduling than reading a few dozen footers does (the mirror of
+    // connectedComponents' driver-vs-distributed threshold), and every
+    // commit pays this pass. The Hadoop FS API works identically from the
+    // driver, so remote stores are covered; commits at 100-TB scale have
+    // thousands of files and take the executor-fanned branch below.
     if (paths.size <= Icebox.DriverFooterMax)
-      return paths.map(Icebox.footerMetaOne(conf, colsV, colTypes)).toMap
+      return Icebox.boundedMap(paths, serialMax = 2)(
+        Icebox.footerMetaOne(conf, colsV, colTypes)).toMap
     val slices = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism * 2))
     spark.sparkContext.parallelize(paths, slices)
       .map(Icebox.footerMetaOne(conf, colsV, colTypes)).collect().toMap
@@ -3364,15 +3405,7 @@ final class Icebox(val tableDir: String) {
       val p = shardPath(sha)
       if (!store.exists(p)) store.createNew(p, bytes)
     }
-    if (metas.sizeIs <= 8) metas.foreach { case (_, _, _, bytes, sha) => persist(bytes, sha) }
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try metas.map { case (_, _, _, bytes, sha) =>
-        val c: java.util.concurrent.Callable[Unit] = () => persist(bytes, sha)
-        pool.submit(c)
-      }.foreach(_.get())
-      finally pool.shutdown()
-    }
+    Icebox.boundedMap(metas, serialMax = 8) { case (_, _, _, bytes, sha) => persist(bytes, sha) }
     val refs = metas.map { case (key, pm, fs, _, sha) =>
       shardCache.put(sha, fs)
       Icebox.ShardRef(key, sha, fs.size.toLong, fs.map(_.sizeBytes).sum, pm)
@@ -3639,17 +3672,7 @@ final class Icebox(val tableDir: String) {
     * — fan them out instead of paying N round trips serially.
     */
   private def loadShards(refs: Seq[Icebox.ShardRef]): Seq[DataFile] =
-    if (refs.sizeIs <= 2) refs.flatMap(loadShard)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, refs.size))
-      try {
-        val futs = refs.map { r =>
-          val c: java.util.concurrent.Callable[Seq[DataFile]] = () => loadShard(r)
-          pool.submit(c)
-        }
-        futs.flatMap(_.get())
-      } finally pool.shutdown()
-    }
+    Icebox.boundedMap(refs, serialMax = 2)(loadShard).flatten
 
   /** Reconstruct the live file set of snapshot `id`: walk parent pointers up
     * to the nearest full manifest (or LRU-cached reconstruction), then
@@ -4085,12 +4108,34 @@ object Icebox {
   private[table] val MaxStringStatBytes = 64
 
   /** Commits at or below this many files read parquet footers on the
-    * DRIVER instead of launching a Spark job: reading a footer is ~1-5 ms
-    * of metadata IO while a job costs tens of ms of scheduling, and every
-    * commit pays the pass. Large commits (the 100-TB shape) fan out to
-    * executors unchanged.
+    * DRIVER, over [[boundedMap]]'s pool, instead of launching a Spark job:
+    * a footer is one small metadata read, while the executor job took
+    * 157 ms and 8 tasks for the 18 files of the bulk_load benchmark's
+    * commit (traced, 4-core host). 64 files are four rounds of the pool.
+    * Large commits (the 100-TB shape) fan out to executors unchanged.
     */
-  private[table] val DriverFooterMax = 16
+  private[table] val DriverFooterMax = 64
+
+  /** Threads of the pool [[boundedMap]] fans metadata IO out over. */
+  private val MetadataPoolMax = 16
+
+  /** `xs.map(f)`, in order, for per-file metadata round trips (footers,
+    * checkpoint shards): up to `serialMax` items run on the caller's
+    * thread; more fan out over a pool of at most [[MetadataPoolMax]]
+    * threads that lives for this call. A failure rethrows its own cause.
+    */
+  private[table] def boundedMap[A, B](xs: Seq[A], serialMax: Int)(f: A => B): Seq[B] =
+    if (xs.sizeIs <= serialMax) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(MetadataPoolMax, xs.size))
+      try xs.map { x =>
+        val c: java.util.concurrent.Callable[B] = () => f(x)
+        pool.submit(c)
+      }.map { fut =>
+        try fut.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+      finally pool.shutdown()
+    }
 
   /** One file's footer → (rows, min/max per stats column, null counts).
     * Shared verbatim by the driver fast path and the executor fan-out —

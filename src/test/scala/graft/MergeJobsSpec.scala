@@ -1,9 +1,5 @@
 package graft
 
-import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.sql.MergeSql
 import graft.table.Icebox
 
@@ -14,44 +10,6 @@ import graft.table.Icebox
   */
 class MergeJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** (job id, job group) of every job start the session has seen. */
-  private val starts = new ConcurrentLinkedQueue[(Int, String)]()
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(e.jobId -> Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** Run a one-task marker job in its own group and return its job id,
-    * once the listener has seen it — every job submitted before it has
-    * been seen by then too (the listener bus delivers in order).
-    */
-  private def marker(): Int = {
-    val group = s"marker-${UUID.randomUUID()}"
-    spark.sparkContext.setJobGroup(group, group)
-    try spark.sparkContext.parallelize(Seq(1), 1).count()
-    finally spark.sparkContext.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    var id: Option[Int] = None
-    while (id.isEmpty && System.nanoTime() < deadline) {
-      id = starts.asScala.collectFirst { case (j, g) if g == group => j }
-      if (id.isEmpty) Thread.sleep(10)
-    }
-    id.getOrElse(fail("the listener never saw the marker job"))
-  }
-
-  /** The number of Spark jobs `body` starts. */
-  private def jobs(body: => Unit): Int = {
-    listener
-    val from = marker()
-    body
-    val to = marker()
-    starts.asScala.count { case (j, _) => j > from && j < to }
-  }
 
   private def morTable(name: String): Icebox = {
     val t = Icebox(tmpDir(s"mergejobs-$name"))
